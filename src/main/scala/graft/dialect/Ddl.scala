@@ -3664,13 +3664,11 @@ object Engine {
       }
     })
 
-  /** `system.parts` must reflect the live catalog (the other system.*
-    * tables are handshake-time snapshots; parts change on every
-    * INSERT/mutation) — build it on demand and substitute a temp view. */
-  /** Substitute the system tables whose content must reflect LIVE
-    * catalog state (post-DDL): parts, databases, tables, columns. Each
-    * referenced name materializes a fresh temp view at query time; the
-    * static system.* views (one/functions/settings) pass through. */
+  /** Substitute the system tables whose content reflects LIVE engine
+    * state (post-DDL catalog, parts, query log, functions, ...). Each
+    * referenced name becomes a fresh temp view at query time; no
+    * system table is stored. Only the static `system.one` view passes
+    * through. */
   private def rewriteSystemParts(spark: SparkSession, sql: String): String = {
     val live: Seq[(String, () => DataFrame)] = Seq(
       "detached_parts" -> (() => Ddl.detachedPartsSnapshot(spark)),

@@ -1283,9 +1283,8 @@ object ChContext {
 
   /** Live catalog frames behind system.databases/tables/columns —
     * built on demand so post-DDL state is visible (Engine.query
-    * substitutes them like system.parts; the setup-time snapshots below
-    * only serve sessions that bypass the engine). Catalog metadata
-    * only — a handful of driver-side rows, not data. */
+    * substitutes them like system.parts). Catalog metadata only — a
+    * handful of driver-side rows, not data. */
   def databasesLive(spark: SparkSession): org.apache.spark.sql.DataFrame =
     spark.catalog.listDatabases().select("name")
 
@@ -1337,57 +1336,16 @@ object ChContext {
     colRows.toDF("database", "table", "name", "type", "position")
   }
 
-  /** Minimal `system.*` surface ClickHouse clients probe (the Play UI
-    * reads server settings, reference index.html; SURVEY §7 scopes this
-    * to stubs). databases/tables are snapshots taken at setup time —
-    * enough for client handshake probes, not a live catalog. */
-  /** One snapshot write per JVM: the catalog is SHARED across sessions
-    * (sharedState) but file-listing caches are per-session, so a
-    * re-snapshot from session B (drop + delete files + rewrite) crashes
-    * session A's next read with FAILED_READ_FILE against the deleted
-    * part files. The engine substitutes LIVE frames for
-    * databases/tables/columns anyway — these parquet snapshots serve
-    * only engine-bypassing readers, for whom first-setup state is the
-    * documented contract. */
-  private val systemSnapshotsDone =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
+  /** The static `system` objects clients probe: the database,
+    * `system.one` and `system.settings` (SURVEY §7 scopes these to
+    * stubs). Everything catalog-backed — databases, tables, columns,
+    * functions, parts, ... — the engine answers from live frames at
+    * query time (`Ddl.rewriteSystemParts`), so set-up writes no table
+    * and starts no Spark job. */
   def setupSystemTables(spark: SparkSession): Unit = {
-    import spark.implicits._
     spark.sql("CREATE DATABASE IF NOT EXISTS system")
     if (!spark.catalog.tableExists("system.one"))
       spark.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
-    if (systemSnapshotsDone.getAndSet(true)) return
-    // snapshots materialize as tiny managed tables (persistent views
-    // cannot reference the temp catalog state they are built from);
-    // drop stale metadata AND leftover warehouse dirs from prior JVMs
-    // (the in-memory catalog forgets them, the location survives)
-    def snapshot(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS system.$name")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        s"system.db/$name")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-      df.write.mode("overwrite").saveAsTable(s"system.$name")
-      // a prior snapshot's file listing may be cached in plans that
-      // already referenced the table (another server session, a cached
-      // view) — stale entries throw FAILED_READ_FILE on the next read
-      spark.catalog.refreshTable(s"system.$name")
-    }
-    snapshot("databases", databasesLive(spark))
-    snapshot("tables", tablesLive(spark))
-    snapshot("columns", columnsLive(spark))
-    // function inventory (Play UI autocomplete: SELECT name FROM
-    // system.functions)
-    snapshot("functions", ChFunctions.functionInventory
-      .map { case (n, agg) => (n, if (agg) 1 else 0) }
-      .toDF("name", "is_aggregate"))
     if (!spark.catalog.tableExists("system.settings"))
       spark.sql("""
         CREATE OR REPLACE VIEW system.settings AS

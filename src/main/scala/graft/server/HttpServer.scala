@@ -28,7 +28,8 @@ class HttpServer(spark: SparkSession, port: Int,
 
   ChFunctions.register(spark)
   private val server = JdkHttpServer.create(new InetSocketAddress(port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+  server.setExecutor(pool)
 
   // "INSERT INTO t [(cols)] FORMAT <binary format>" — these bodies must
   // never round-trip through UTF-8
@@ -308,7 +309,9 @@ class HttpServer(spark: SparkSession, port: Int,
   }
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  /** Also ends the handler threads: they are non-daemon and would keep
+    * the JVM alive after `main` returns. */
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
   def boundPort: Int = server.getAddress.getPort
 }
 
